@@ -467,19 +467,15 @@ def cmd_stats(args) -> int:
 
     from pyspark.sql import functions as _F
 
-    from data_prepper_spark.index import layout
     from data_prepper_spark.query.engine import load_stats
+    from data_prepper_spark.query.exchange import has_blocks, read_blocks
 
     spark = _get_spark(args)
     stats = load_stats(args.index)
     out = {"index": args.index, **stats}
-    blocks_path = layout.resolve(args.index, "blocks")
-    if os.path.exists(blocks_path):
-        blocks = spark.read.parquet(blocks_path)
-        if "seg" not in blocks.columns:
-            blocks = blocks.withColumn("seg", _F.lit(0).cast("long"))
+    if has_blocks(args.index):
         per_seg = (
-            blocks.groupBy("seg")
+            read_blocks(spark, args.index).groupBy("seg")
             .agg(
                 _F.count("*").alias("block_rows"),
                 _F.countDistinct("term").alias("terms"),
@@ -1685,10 +1681,11 @@ def main(argv: list[str] | None = None) -> int:
     pk = sub.add_parser(
         "pq-query", help="ADC cosine top-k over a pq-build index")
     pk.add_argument("--index", required=True, help="pq-build --out dir")
-    pk.add_argument("--queries", default=None,
-                    help="parquet of (query_id, embedding)")
-    pk.add_argument("--vector", default=None,
-                    help="inline query vector: comma-separated floats")
+    pkq = pk.add_mutually_exclusive_group(required=True)
+    pkq.add_argument("--queries", default=None,
+                     help="parquet of (query_id, embedding)")
+    pkq.add_argument("--vector", default=None,
+                     help="inline query vector: comma-separated floats")
     pk.add_argument("--k", type=int, default=10)
     pk.add_argument("--id-col", default="vec_id")
     pk.add_argument("--local-cores", type=int, default=None)

@@ -289,6 +289,7 @@ def _spimi_kernel(
 
 def compute_stats(
     df_docs: DataFrame, text_col: str = "text", tokenizer: str = "ascii",
+    conv_ids: bool = False,
 ) -> dict:
     """Corpus (n_docs, avgdl) in one narrow pass. Token COUNT via
     regexp_count — identical to size(filter(split(...))) for the shared
@@ -296,7 +297,12 @@ def compute_stats(
     which at profile time was ~25% of build wall clock in allocation +
     memory traffic. A '+stop' analyzer changes dl (stopwords don't
     count), so that case pays for the materialized filtered array;
-    '+stem' never changes token COUNT and keeps the fast path."""
+    '+stem' never changes token COUNT and keeps the fast path.
+
+    `conv_ids` (arithmetic ids) also summarizes, in the same pass, the
+    serial digits of the conv_ids as `conv_id_digits` = (pad, shortest):
+    the longest zero-padded serial and the shortest one. See
+    _conv_id_pad."""
     base, stop, _stem = parse_analyzer(tokenizer)
     dl_sql = (
         f"size({spark_tokenize_sql(text_col, base + '+stop')})"
@@ -306,12 +312,38 @@ def compute_stats(
             f"regexp_count(lower({text_col}), '[\\\\p{{L}}\\\\p{{N}}]+')"
         )
     )
+    aggs = [F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")]
+    if conv_ids:
+        digits = F.regexp_extract("conv_id", CONV_ID_ARITH_RE, 1)
+        aggs += [
+            # a lone "0" is the canonical serial 0, not padding
+            F.max(F.when(digits.startswith("0") & (F.length(digits) > 1),
+                         F.length(digits))).alias("pad"),
+            F.min(F.length(digits)).alias("shortest"),
+        ]
     row = (
-        df_docs.select(F.expr(dl_sql).alias("dl"))
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"))
+        df_docs.select(F.expr(dl_sql).alias("dl"),
+                       *(["conv_id"] if conv_ids else []))
+        .agg(*aggs)
         .collect()[0]
     )
-    return {"n_docs": row["n_docs"], "avgdl": float(row["avgdl"] or 0.0)}
+    out = {"n_docs": row["n_docs"], "avgdl": float(row["avgdl"] or 0.0)}
+    if conv_ids:
+        out["conv_id_digits"] = (int(row["pad"] or 0), row["shortest"])
+    return out
+
+
+def _conv_id_pad(digits: tuple, width: int | None) -> int | None:
+    """`width` if 'conv-' || serial zero-padded to `width` digits
+    reproduces every conv_id whose serials `digits` = (pad, shortest)
+    summarizes (width 0 = canonical, unpadded), else None. Recorded in
+    stats.json as `conv_id_pad`, it lets query-side routing
+    (engine.sharded_docs) re-derive the exact conv_id string the build
+    hashed from a doc_id."""
+    pad, shortest = digits
+    if width is None or width < pad or (shortest is not None and width > shortest):
+        return None
+    return width
 
 
 def _assign_doc_ids_convmap(
@@ -464,7 +496,8 @@ def build_index(
         # an index has ONE analyzer for its whole life (same contract as
         # an OpenSearch index mapping): incremental appends reuse it
         tokenizer = old.get("tokenizer", "ascii")
-        inc = compute_stats(docs_assigned, tokenizer=tokenizer)
+        inc = compute_stats(docs_assigned, tokenizer=tokenizer,
+                            conv_ids=id_scheme == "arith")
         n_total = old["n_docs"] + inc["n_docs"]
         avgdl = (
             old["avgdl"] * old["n_docs"] + inc["avgdl"] * inc["n_docs"]
@@ -478,9 +511,16 @@ def build_index(
             # phrase queries need positions in EVERY segment
             positions=bool(old.get("positions", False)) and store_positions,
         )
+        if id_scheme == "arith":
+            stats["conv_id_pad"] = _conv_id_pad(
+                inc["conv_id_digits"], old.get("conv_id_pad"))
         layout.publish_file(stats_path, json.dumps(stats))
     else:
-        stats = compute_stats(docs_assigned, tokenizer=tokenizer)
+        stats = compute_stats(docs_assigned, tokenizer=tokenizer,
+                              conv_ids=id_scheme == "arith")
+        if id_scheme == "arith":
+            digits = stats.pop("conv_id_digits")
+            stats["conv_id_pad"] = _conv_id_pad(digits, digits[0])
         stats.update(
             n_shards=n_shards, block_size=block_size, k1=K1, b=B,
             snapshot_id=snapshot_id, avgdl_min=stats["avgdl"],

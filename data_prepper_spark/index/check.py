@@ -29,13 +29,13 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from data_prepper_spark.index import layout
+from data_prepper_spark.query.exchange import read_blocks, read_dictionary
 
 
 def _check_kernel():
     from data_prepper_spark.index import codec
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(key[0])
         violations = []
         term_counts: dict[str, int] = {}
@@ -96,10 +96,7 @@ def _check_kernel():
 
 def check_index(spark: SparkSession, index_dir: str) -> dict:
     stats = json.load(open(os.path.join(index_dir, "stats.json")))
-    blocks = spark.read.parquet(layout.resolve(index_dir, "blocks"))
-    if "seg" not in blocks.columns:
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    per_shard = blocks.select(
+    per_shard = read_blocks(spark, index_dir).select(
         "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
         "gaps", "tfs", "dls",
     ).filter(
@@ -125,7 +122,7 @@ def check_index(spark: SparkSession, index_dir: str) -> dict:
                    (F.col("term") != "\x00distinct_docs"))
         .groupBy("term").agg(F.sum("n").alias("n"))
     )
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
+    dictionary = read_dictionary(spark, index_dir)
     joined = counts.join(dictionary, "term", "full").select(
         "term",
         F.coalesce("n", F.lit(0)).alias("postings"),

@@ -50,6 +50,9 @@ from data_prepper_spark.index import layout
 # query task closure therefore NEVER holds more than this many ranges.
 COMPACT_THRESHOLD_RANGES = 100_000  # ~2.4 MB of closure arrays
 
+# the writer's schema: reads declare it, so no schema-inference job runs
+TOMBSTONE_SCHEMA = "start long, end long, upto_seg long"
+
 
 class TombstoneOverflowError(RuntimeError):
     """Raised when a delete would push the tombstone set past
@@ -123,7 +126,7 @@ def coalesce_tombstones(spark, index_dir: str) -> int:
     path = _tomb_path(index_dir)
     if "://" not in index_dir and not os.path.exists(path):
         return 0
-    pdf = _minimize(spark.read.parquet(path).toPandas())
+    pdf = _minimize(spark.read.schema(TOMBSTONE_SCHEMA).parquet(path).toPandas())
     layout.publish_dir(
         index_dir,
         "tombstones",
@@ -189,7 +192,8 @@ def write_tombstones(
     spark.createDataFrame(pdf).write.mode("append").parquet(path)
     # cheap: parquet row count comes from footer metadata only
     _enforce_budget(
-        spark, index_dir, spark.read.parquet(path).count(), auto_compact
+        spark, index_dir,
+        spark.read.schema(TOMBSTONE_SCHEMA).parquet(path).count(), auto_compact
     )
 
 
@@ -268,7 +272,7 @@ def load_tombstones(spark, index_dir: str) -> Tombstones | None:
     path = _tomb_path(index_dir)
     if "://" not in index_dir and not os.path.exists(path):
         return None
-    pdf = spark.read.parquet(path).toPandas()
+    pdf = spark.read.schema(TOMBSTONE_SCHEMA).parquet(path).toPandas()
     if not len(pdf):
         return None
     return Tombstones(

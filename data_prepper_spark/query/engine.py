@@ -8,17 +8,21 @@ queries — scatter to doc-partitioned shards, top-k per shard, gather):
       |                                        partition pruning is free,
       |                                        row-group pruning via the
       |                                        term sort order
-      |> broadcast-join tiny (query_id, term, idf, k) table
-      |> groupBy(query_id, shard).applyInPandas(kernel)   # WAND or
-      |                                                   # exhaustive
-      |> per-query global top-k (Window over the small per-shard top-ks)
+      |> broadcast-join the (term, df) dictionary slice
+      |> groupBy(shard).applyInPandas(kernel)   # per-term query map in
+      |                                         # the kernel closure;
+      |                                         # WAND, block-max or
+      |                                         # exhaustive per shard
+      |> per-query global top-k (Window over the small per-shard top-ks,
+      |                          rank <= the k each hit carries)
 
-No stage ever materializes a full per-term posting list; the widest
-data in flight is `sum over query terms of their block rows in one
-shard`, bounded by block_size x blocks-per-term-per-shard. idf uses the
-GLOBAL dictionary (df summed across shards) so scores are identical to
-a single-node oracle — same contract OpenSearch's dfs_query_then_fetch
-provides.
+The plan lives in query/exchange.py (`scatter`, `gather`); every entry
+point here only preps its query map and picks its kernel. No stage ever
+materializes a full per-term posting list; the widest data in flight is
+`sum over query terms of their block rows in one shard`, bounded by
+block_size x blocks-per-term-per-shard. idf uses the GLOBAL dictionary
+(df summed across shards) so scores are identical to a single-node
+oracle — same contract OpenSearch's dfs_query_then_fetch provides.
 """
 
 from __future__ import annotations
@@ -28,16 +32,26 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_prepper_spark.index import layout, tombstones
+from data_prepper_spark.index import tombstones
 from data_prepper_spark.query import wand as wand_mod
 from data_prepper_spark.query import prep
 from data_prepper_spark.query.bm25_df import DOC_ID_STRIDE
-from data_prepper_spark.query.exchange import spread_by_shard
+from data_prepper_spark.query.exchange import gather, scatter
 
 _KERNEL_OUT = "query_id string, doc_id long, score double"
+
+# block columns each kernel family reads: positions (`poss`, the largest
+# column) reach the scan only for positional queries
+_COUNT_COLS = ("shard", "seg", "term", "block_ord", "first_doc", "gaps")
+_DECODE_COLS = (
+    "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
+    "gaps", "tfs", "dls",
+)
+_SCORE_COLS = _DECODE_COLS + ("max_partial",)
+_POSITION_COLS = _DECODE_COLS + ("poss",)
 
 
 class _DecodeLRU:
@@ -107,7 +121,7 @@ def _shard_kernel(
     query — in this call AND in later jobs hitting a reused python
     worker — reuse decoded postings."""
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         cache = _NsCache((cache_ns, int(key[0])))
         # one cursor per (term, seg): incremental builds append a new
         # SEGMENT of doc-sorted blocks per term (doc sets disjoint across
@@ -232,117 +246,64 @@ def score_topk(
               F.lit(None).cast("long").alias("after_doc")]
     )
     queries = queries.select("query_id", "query_text", "k", *cursor_cols)
-    # one row per term carrying its interested queries — block rows are
-    # NOT replicated per query through the shuffle. The distinct
-    # query-term set is tiny and driver-known (the queries ARE a
-    # driver-side input), so the qmap builds in Python and the term set
-    # pushes as an In-filter into BOTH parquet scans: a broadcast join
-    # alone would decompress every block row of every term before
-    # filtering, while `term IN (...)` reaches the scan (PushedFilters)
-    # and prunes row groups via the per-shard term sort order.
-    # interactive batches (<= threshold) prep in pure Python and push
-    # the term set as an In-filter; LARGE batches (batch scoring) prep
-    # distributedly (prep.qmap_df_dist) and join on term instead — the
-    # one take() probe is the only driver materialization either way
+    # interactive batches (<= threshold) prep in pure Python: the query
+    # map rides in the kernel closure and the term set pushes as an
+    # In-filter into both parquet scans. LARGE batches (batch scoring)
+    # prep distributedly (prep.qmap_df_dist) and join on term instead —
+    # the one take() probe is the only driver materialization either way
     head = queries.take(prep.PREP_DISTRIBUTED_THRESHOLD + 1)
-    distributed = len(head) > prep.PREP_DISTRIBUTED_THRESHOLD
-    if distributed:
-        per_term, terms = None, None
+    if len(head) > prep.PREP_DISTRIBUTED_THRESHOLD:
+        per_term = prep.qmap_df_dist(spark, queries, "score", mode)
     else:
         per_term = prep.score_entries([r.asDict() for r in head], mode)
-        terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
-    if (not distributed and not terms) or local_missing:
-        # no query terms, or an empty index (no blocks ever written);
-        # the existence check only applies to local paths — remote
-        # (s3://, hdfs://) indexes always attempt the read
-        return spark.createDataFrame(
-            [],
-            "query_id string, rank long, "
-            + ("conv long, " if collapse else "")
-            + "doc_id long, score double",
-        )
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    blocks = spark.read.parquet(blocks_path)
-    if "seg" not in blocks.columns:  # pre-segment index layout
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    # explicit projection: BM25 scoring never touches the position
-    # stream, so the (largest) `poss` column must not reach the scan
-    # (ReadSchema pruning — positions roughly double block bytes)
-    slim = blocks.select(
-        "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-        "gaps", "tfs", "dls", "max_partial",
+    per_shard = scatter(
+        spark, index_dir, per_term, prep.SCORE_FIELDS,
+        _score_kernel(spark, index_dir, stats, algo,
+                      collapse_stride=_stride if collapse else None),
+        _KERNEL_OUT, _SCORE_COLS, with_k=True,
     )
-    if distributed:
-        # shuffle join on term: a batch this size touches most of the
-        # vocabulary, so term In-pushdown would buy little while the
-        # In-list itself would bloat the plan; the dictionary joins on
-        # the same key with no extra driver state
-        qmap = prep.qmap_df_dist(spark, queries, "score", mode)
-        needed = slim.join(qmap, "term").join(dictionary, "term")
-    else:
-        qmap = prep.qmap_df(spark, per_term, prep.SCORE_FIELDS)
-        dict_slice = dictionary.filter(F.col("term").isin(terms))
-        needed = (
-            slim.filter(F.col("term").isin(terms))
-            .join(F.broadcast(qmap), "term")
-            .join(F.broadcast(dict_slice), "term")
+    if not collapse:
+        return gather(per_shard)
+    # cross-shard merge of per-shard collapsed top-k: a group's global
+    # best is the max over shards of its per-shard best ((score desc,
+    # doc asc) via struct max on (score, -doc_id)), then top-k GROUPS
+    # per query. The merge input is bounded by k * n_shards rows per
+    # query.
+    best = (
+        per_shard.withColumn("conv", F.expr(f"doc_id div {_stride}"))
+        .groupBy("query_id", "k", "conv")
+        .agg(
+            F.max(
+                F.struct(
+                    F.col("score"),
+                    (-F.col("doc_id")).alias("neg_doc"),
+                    F.col("doc_id"),
+                )
+            ).alias("b")
         )
-    ub_scale = max(1.0, stats["avgdl"] / stats.get("avgdl_min", stats["avgdl"]))
+        .select(
+            "query_id", "k", "conv",
+            F.col("b.doc_id").alias("doc_id"),
+            F.col("b.score").alias("score"),
+        )
+    )
+    return gather(best, "conv")
+
+
+def _score_kernel(spark, index_dir, stats, algo, collapse_stride=None):
+    """_shard_kernel over this index's corpus stats and tombstones."""
+    avgdl_min = stats.get("avgdl_min", stats["avgdl"])
+    # an empty corpus has avgdl 0 (and no blocks for the kernel to see)
+    ub_scale = max(1.0, stats["avgdl"] / avgdl_min) if avgdl_min else 1.0
     tomb = tombstones.load_tombstones(spark, index_dir)
-    # rank-join side: forced broadcast only for driver-scale batches
-    qk = queries.select("query_id", "k")
-    qk = qk if distributed else F.broadcast(qk)
-    per_shard = spread_by_shard(needed).groupBy("shard").applyInPandas(
-        _shard_kernel(
-            stats["avgdl"], stats["n_docs"], algo, ub_scale,
-            # the ns pins idf/avgdl/liveDocs inputs: cached partials
-            # embed idf(n_docs, df) and avgdl and exclude tombstoned
-            # docs — a new corpus/tombstone state gets a fresh namespace
-            cache_ns=(os.path.abspath(index_dir), stats["n_docs"],
-                      round(stats["avgdl"], 9), tombstones.fingerprint(tomb)),
-            tomb=tomb,
-            collapse_stride=_stride if collapse else None,
-        ),
-        schema=_KERNEL_OUT,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    if collapse:
-        # cross-shard merge of per-shard collapsed top-k: a group's
-        # global best is the max over shards of its per-shard best
-        # ((score desc, doc asc) via struct max on (score, -doc_id)),
-        # then top-k GROUPS per query. The merge input is bounded by
-        # k * n_shards rows per query.
-        best = (
-            per_shard.withColumn("conv", F.expr(f"doc_id div {_stride}"))
-            .groupBy("query_id", "conv")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("score"),
-                        (-F.col("doc_id")).alias("neg_doc"),
-                        F.col("doc_id"),
-                    )
-                ).alias("b")
-            )
-            .select(
-                "query_id", "conv",
-                F.col("b.doc_id").alias("doc_id"),
-                F.col("b.score").alias("score"),
-            )
-        )
-        return (
-            best.join(qk, "query_id")
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= F.col("k"))
-            .select("query_id", "rank", "conv", "doc_id", "score")
-        )
-    return (
-        per_shard.join(qk, "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
+    return _shard_kernel(
+        stats["avgdl"], stats["n_docs"], algo, ub_scale,
+        # the ns pins idf/avgdl/liveDocs inputs: cached partials embed
+        # idf(n_docs, df) and avgdl and exclude tombstoned docs — a new
+        # corpus/tombstone state gets a fresh namespace
+        cache_ns=(os.path.abspath(index_dir), stats["n_docs"],
+                  round(stats["avgdl"], 9), tombstones.fingerprint(tomb)),
+        tomb=tomb, collapse_stride=collapse_stride,
     )
 
 
@@ -362,45 +323,15 @@ def match_scores(
     scatter plan as score_topk: term In-filter pushed to both parquet
     scans, one kernel exchange, positions never read."""
     stats = load_stats(index_dir)
-    mode = stats.get("tokenizer", "ascii")
-    queries = queries.select(
-        "query_id", "query_text", F.lit(0).alias("k"),
-        F.lit(None).cast("double").alias("after_score"),
-        F.lit(None).cast("long").alias("after_doc"),
-    )
     per_term = prep.score_entries(
-        [r.asDict() for r in queries.collect()], mode
+        [dict(r, k=0) for r in
+         prep.collect_rows(queries, "query_id", "query_text")],
+        stats.get("tokenizer", "ascii"),
     )
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
-    if not terms or local_missing:
-        return spark.createDataFrame([], _KERNEL_OUT)
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    blocks = spark.read.parquet(blocks_path)
-    if "seg" not in blocks.columns:
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    slim = blocks.select(
-        "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-        "gaps", "tfs", "dls", "max_partial",
-    )
-    qmap = prep.qmap_df(spark, per_term, prep.SCORE_FIELDS)
-    dict_slice = dictionary.filter(F.col("term").isin(terms))
-    needed = (
-        slim.filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
-        .join(F.broadcast(dict_slice), "term")
-    )
-    ub_scale = max(1.0, stats["avgdl"] / stats.get("avgdl_min", stats["avgdl"]))
-    tomb = tombstones.load_tombstones(spark, index_dir)
-    return spread_by_shard(needed).groupBy("shard").applyInPandas(
-        _shard_kernel(
-            stats["avgdl"], stats["n_docs"], "all", ub_scale,
-            cache_ns=(os.path.abspath(index_dir), stats["n_docs"],
-                      round(stats["avgdl"], 9), tombstones.fingerprint(tomb)),
-            tomb=tomb,
-        ),
-        schema=_KERNEL_OUT,
+    return scatter(
+        spark, index_dir, per_term, prep.SCORE_FIELDS,
+        _score_kernel(spark, index_dir, stats, "all"),
+        _KERNEL_OUT, _SCORE_COLS,
     )
 
 
@@ -411,7 +342,7 @@ def _count_kernel(tomb=None):
     each term (no tfs/dls/poss/max_partial ever reach the scan), union
     doc ids per query, count live docs."""
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         from data_prepper_spark.index import codec
 
         term_docs: dict[str, np.ndarray] = {}
@@ -463,40 +394,20 @@ def count_matches(
     plus keys, so the count costs one pruned scan of the SMALLEST
     posting stream. A doc lives in exactly one shard, so the global
     total is a plain sum of per-shard distinct counts; absent-term
-    queries zero-fill via the left join."""
+    queries zero-fill from a union of zero counts."""
     stats = load_stats(index_dir)
-    mode = stats.get("tokenizer", "ascii")
     per_term = prep.count_entries(
-        prep.collect_rows(queries, "query_id", "query_text"), mode
+        prep.collect_rows(queries, "query_id", "query_text"),
+        stats.get("tokenizer", "ascii"),
     )
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
-    base = queries.select("query_id").distinct()
-    if not terms or local_missing:
-        return base.select(
-            "query_id", F.lit(0).cast("long").alias("total_hits")
-        )
-    qmap = prep.qmap_df(spark, per_term, prep.COUNT_FIELDS)
-    blocks = spark.read.parquet(blocks_path)
-    if "seg" not in blocks.columns:
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    needed = (
-        blocks.select("shard", "seg", "term", "block_ord", "first_doc", "gaps")
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
-    )
-    per_shard = spread_by_shard(needed).groupBy("shard").applyInPandas(
+    per_shard = scatter(
+        spark, index_dir, per_term, prep.COUNT_FIELDS,
         _count_kernel(tomb=tombstones.load_tombstones(spark, index_dir)),
-        schema="query_id string, total_hits long",
+        "query_id string, total_hits long", _COUNT_COLS, dictionary=False,
     )
-    counts = per_shard.groupBy("query_id").agg(
-        F.sum("total_hits").alias("total_hits")
-    )
-    return base.join(counts, "query_id", "left").select(
-        "query_id",
-        F.coalesce("total_hits", F.lit(0)).cast("long").alias("total_hits"),
-    )
+    zeros = queries.select("query_id", F.lit(0).cast("long").alias("total_hits"))
+    return per_shard.unionByName(zeros).groupBy("query_id").agg(
+        F.sum("total_hits").alias("total_hits"))
 
 
 # ---------------------------------------------------------- match_phrase
@@ -624,7 +535,7 @@ def _phrase_kernel(avgdl: float, n_docs: int, tomb=None):
     exact and unchanged."""
     from data_prepper_spark.index import codec
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         groups: dict[str, pd.DataFrame] = {}   # term -> block rows (sorted)
         dfs: dict[str, int] = {}
         idfs: dict[str, float] = {}
@@ -757,42 +668,14 @@ def phrase_topk(
             f"index at {index_dir} was built without positions "
             "(store_positions=False) — cannot serve match_phrase"
         )
-    mode = stats.get("tokenizer", "ascii")
-    per_term = prep.phrase_entries(prep.collect_rows(queries), mode)
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
-    if not terms or local_missing:
-        return spark.createDataFrame(
-            [], "query_id string, rank long, doc_id long, score double"
-        )
-    qmap = prep.qmap_df(spark, per_term, prep.PHRASE_FIELDS)
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    dict_slice = dictionary.filter(F.col("term").isin(terms))
-    blocks = spark.read.parquet(blocks_path)
-    needed = (
-        blocks.select(
-            "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-            "gaps", "tfs", "dls", "poss",
-        )
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
-        .join(F.broadcast(dict_slice), "term")
-    )
-    per_shard = spread_by_shard(needed).groupBy("shard").applyInPandas(
-        _phrase_kernel(
-            stats["avgdl"], stats["n_docs"],
-            tomb=tombstones.load_tombstones(spark, index_dir),
-        ),
-        schema=_KERNEL_OUT,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.join(F.broadcast(queries.select("query_id", "k")), "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    per_term = prep.phrase_entries(
+        prep.collect_rows(queries), stats.get("tokenizer", "ascii"))
+    return gather(scatter(
+        spark, index_dir, per_term, prep.PHRASE_FIELDS,
+        _phrase_kernel(stats["avgdl"], stats["n_docs"],
+                       tomb=tombstones.load_tombstones(spark, index_dir)),
+        _KERNEL_OUT, _POSITION_COLS, with_k=True,
+    ))
 
 
 # ----------------------------------------------------------- bool query
@@ -813,7 +696,7 @@ def _bool_kernel(avgdl: float, n_docs: int, tomb=None):
     `match` on the same terms."""
     from data_prepper_spark.index import codec
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         groups: dict[str, pd.DataFrame] = {}
         dfs: dict[str, int] = {}
         idfs: dict[str, float] = {}
@@ -1046,42 +929,12 @@ def bool_topk(
     # retired SQL prep here cost THREE blocking jobs per call
     # (prep.bool_entries; conjunctive OR-groups ride `must_groups`)
     per_term = prep.bool_entries(prep.collect_rows(queries), mode)
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
-    if not terms or local_missing:
-        return spark.createDataFrame(
-            [], "query_id string, rank long, doc_id long, score double"
-        )
-    qmap = prep.qmap_df(spark, per_term, prep.BOOL_FIELDS)
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    dict_slice = dictionary.filter(F.col("term").isin(terms))
-    blocks = spark.read.parquet(blocks_path)
-    if "seg" not in blocks.columns:
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    needed = (
-        blocks.select(
-            "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-            "gaps", "tfs", "dls",
-        )
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
-        .join(F.broadcast(dict_slice), "term")
-    )
-    per_shard = spread_by_shard(needed).groupBy("shard").applyInPandas(
-        _bool_kernel(
-            stats["avgdl"], stats["n_docs"],
-            tomb=tombstones.load_tombstones(spark, index_dir),
-        ),
-        schema=_KERNEL_OUT,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.join(F.broadcast(queries.select("query_id", "k")), "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return gather(scatter(
+        spark, index_dir, per_term, prep.BOOL_FIELDS,
+        _bool_kernel(stats["avgdl"], stats["n_docs"],
+                     tomb=tombstones.load_tombstones(spark, index_dir)),
+        _KERNEL_OUT, _DECODE_COLS, with_k=True,
+    ))
 
 
 def boosting_topk(
@@ -1132,7 +985,8 @@ def _filtered_kernel(avgdl: float, n_docs: int, tomb=None):
     scales with the FILTERED corpus, not the terms' df."""
     from data_prepper_spark.index import codec
 
-    def run(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, left: pd.DataFrame,
+            right: pd.DataFrame) -> pd.DataFrame:
         if not len(left) or not len(right):
             return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
         allowed = np.unique(right["doc_id"].to_numpy(np.int64))
@@ -1209,70 +1063,62 @@ def sharded_docs(
     """(shard, doc_id) for corpus rows — MUST mirror build_index's
     assignment (index/build.py: xxhash64(conv_id) % n_shards). The
     routing key is derived FROM THE INDEX's recorded id scheme, never
-    guessed from the corpus columns (a corpus without conv_id routed by
-    doc_id-string against a conv-sharded index silently lands docs in
-    the wrong shards and DROPS results):
+    guessed from the corpus columns (a corpus row hashed by any other
+    string than the one the build hashed lands in the wrong shard and
+    silently DROPS results):
 
-      arith    — conv_id is a pure function of doc_id
-                 ('conv-' || doc_id div stride), derived here;
+      shard_key doc_id — external ids without conv_id: the build hashed
+                 the doc_id string;
+      conv_id in docs  — hash it: it is the string the build hashed
+                 (every other scheme shards by conv_id);
+      arith    — conv_id re-derived as 'conv-' || doc_id div stride,
+                 zero-padded to the width stats.json's conv_id_pad
+                 records (0 = canonical); a build whose ids no single
+                 width reproduces records none;
       convmap  — recover conv_id by joining the index's persisted
                  (conv_id, serial) side table on serial = doc_id div
                  stride (distributed equi-join; the convmap is NOT
                  broadcast — ~10^8 rows at 10^12 turns);
-      external — stats.json's shard_key records whether the build
-                 sharded by a PROVIDED conv_id column or by the
-                 doc_id-string fallback; a conv_id-sharded external
-                 index REQUIRES conv_id in `docs` (loud raise, never a
-                 silent wrong-shard route).
+      anything else raises: docs must carry conv_id.
 
     Fast path: a `docs` that already carries a `shard` column — the
     corpus store (index/corpus_store.py) precomputes this index's
     routing at write time — is trusted as-is: no derivation, no convmap
     join, no xxhash at query time. Only pass such a column if it came
     from THIS index's store (the store is keyed by index_dir)."""
-    from data_prepper_spark.query.bm25_df import DOC_ID_STRIDE
-
     n_shards = int(stats["n_shards"])
+    doc_id = F.col("doc_id").cast("long")
     if "shard" in docs.columns:
         return docs.select(
             F.col("shard").cast("int").alias("shard"),
-            F.col("doc_id").cast("long").alias("doc_id"), *carry,
+            doc_id.alias("doc_id"), *carry,
         )
     scheme = stats.get("id_scheme", "arith")
-    if scheme == "external" and stats.get("shard_key", "conv_id") == "conv_id":
-        if "conv_id" not in docs.columns:
-            raise ValueError(
-                "this external-id index was sharded by a provided conv_id "
-                "column; pass a docs DataFrame that includes conv_id "
-                "(routing by doc_id would silently drop results)"
-            )
-        out = docs.select(
-            F.col("doc_id").cast("long").alias("doc_id"), "conv_id", *carry
-        )
-        base = F.col("conv_id")
-        return out.select(
-            F.pmod(F.xxhash64(base), F.lit(n_shards)).cast("int")
-            .alias("shard"),
-            "doc_id", *carry,
-        )
-    out = docs.select(F.col("doc_id").cast("long").alias("doc_id"), *carry)
-    if scheme == "arith":
-        base = F.concat(
-            F.lit("conv-"),
-            (F.col("doc_id") / DOC_ID_STRIDE).cast("long").cast("string"),
-        )
+    serial = (doc_id / DOC_ID_STRIDE).cast("long")
+    if stats.get("shard_key", "conv_id") == "doc_id":
+        key = doc_id.cast("string")
+    elif "conv_id" in docs.columns:
+        key = F.col("conv_id")
+    elif scheme == "arith" and stats.get("conv_id_pad") is not None:
+        digits, pad = serial.cast("string"), int(stats["conv_id_pad"])
+        key = F.concat(F.lit("conv-"), F.when(
+            F.length(digits) < pad, F.lpad(digits, pad, "0")).otherwise(digits))
     elif scheme == "convmap":
         cm = spark.read.parquet(os.path.join(index_dir, "convmap"))
-        out = out.withColumn(
-            "_serial", (F.col("doc_id") / DOC_ID_STRIDE).cast("long")
-        ).join(cm.select(F.col("serial").alias("_serial"), "conv_id"),
-               "_serial").drop("_serial")
-        base = F.col("conv_id")
-    else:  # external ids sharded by the doc_id-string fallback
-        base = F.col("doc_id").cast("string")
-    return out.select(
-        F.pmod(F.xxhash64(base), F.lit(n_shards)).cast("int").alias("shard"),
-        "doc_id", *carry,
+        docs = docs.withColumn("_serial", serial).join(
+            cm.select(F.col("serial").alias("_serial"),
+                      F.col("conv_id").alias("_conv_id")), "_serial")
+        key = F.col("_conv_id")
+    else:
+        raise ValueError(
+            f"this {scheme}-id index was sharded by conv_id strings that "
+            "cannot be re-derived from doc_id (no single zero-pad width "
+            "reproduces them); pass a docs DataFrame that includes conv_id "
+            "(routing by a re-derived id would silently drop results)"
+        )
+    return docs.select(
+        F.pmod(F.xxhash64(key), F.lit(n_shards)).cast("int").alias("shard"),
+        doc_id.alias("doc_id"), *carry,
     )
 
 
@@ -1310,50 +1156,17 @@ def filtered_topk(
         query) through the final window."""
     stats = load_stats(index_dir)
     mode = stats.get("tokenizer", "ascii")
-    n_shards = int(stats["n_shards"])
-    queries = queries.select("query_id", "query_text", "k")
-    per_term = prep.simple_entries(prep.collect_rows(queries), mode)
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
-    if not terms or local_missing:
-        return spark.createDataFrame(
-            [], "query_id string, rank long, doc_id long, score double"
-        )
-    qmap = prep.qmap_df(spark, per_term, prep.SIMPLE_FIELDS)
+    per_term = prep.simple_entries(
+        prep.collect_rows(queries, "query_id", "query_text", "k"), mode)
     allowed = sharded_docs(
         spark, index_dir, docs.filter(F.expr(filter_expr)), stats
     )
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    dict_slice = dictionary.filter(F.col("term").isin(terms))
-    blocks = spark.read.parquet(blocks_path)
-    if "seg" not in blocks.columns:
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    needed = (
-        blocks.select(
-            "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-            "gaps", "tfs", "dls",
-        )
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
-        .join(F.broadcast(dict_slice), "term")
-    )
-    tomb = tombstones.load_tombstones(spark, index_dir)
-    per_shard = (
-        spread_by_shard(needed).groupBy("shard")
-        .cogroup(spread_by_shard(allowed).groupBy("shard"))
-        .applyInPandas(
-            _filtered_kernel(stats["avgdl"], stats["n_docs"], tomb=tomb),
-            schema=_KERNEL_OUT,
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.join(F.broadcast(queries.select("query_id", "k")), "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return gather(scatter(
+        spark, index_dir, per_term, prep.SIMPLE_FIELDS,
+        _filtered_kernel(stats["avgdl"], stats["n_docs"],
+                         tomb=tombstones.load_tombstones(spark, index_dir)),
+        _KERNEL_OUT, _DECODE_COLS, right=allowed, with_k=True,
+    ))
 
 
 def _function_score_kernel(avgdl: float, n_docs: int, boost_mode: str,
@@ -1365,7 +1178,8 @@ def _function_score_kernel(avgdl: float, n_docs: int, boost_mode: str,
     changes ranking, so it must precede the cut)."""
     from data_prepper_spark.index import codec
 
-    def run(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, left: pd.DataFrame,
+            right: pd.DataFrame) -> pd.DataFrame:
         if not len(left) or not len(right):
             return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
         r_docs = right["doc_id"].to_numpy(np.int64)
@@ -1473,16 +1287,8 @@ def function_score_topk(
         raise ValueError(f"unknown boost_mode {boost_mode!r}")
     stats = load_stats(index_dir)
     mode = stats.get("tokenizer", "ascii")
-    queries = queries.select("query_id", "query_text", "k")
-    per_term = prep.simple_entries(prep.collect_rows(queries), mode)
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
-    if not terms or local_missing:
-        return spark.createDataFrame(
-            [], "query_id string, rank long, doc_id long, score double"
-        )
-    qmap = prep.qmap_df(spark, per_term, prep.SIMPLE_FIELDS)
+    per_term = prep.simple_entries(
+        prep.collect_rows(queries, "query_id", "query_text", "k"), mode)
     src = docs.filter(F.expr(filter_expr)) if filter_expr else docs
     # `missing` (OpenSearch field_value_factor's missing param): a null
     # factor — null attribute, null-propagating expression — would
@@ -1493,38 +1299,14 @@ def function_score_topk(
                    F.lit(float(missing))),
     )
     allowed = sharded_docs(spark, index_dir, src, stats, carry=("factor",))
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    dict_slice = dictionary.filter(F.col("term").isin(terms))
-    blocks = spark.read.parquet(blocks_path)
-    if "seg" not in blocks.columns:
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    needed = (
-        blocks.select(
-            "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-            "gaps", "tfs", "dls",
-        )
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
-        .join(F.broadcast(dict_slice), "term")
-    )
-    tomb = tombstones.load_tombstones(spark, index_dir)
-    per_shard = (
-        spread_by_shard(needed).groupBy("shard")
-        .cogroup(spread_by_shard(allowed).groupBy("shard"))
-        .applyInPandas(
-            _function_score_kernel(
-                stats["avgdl"], stats["n_docs"], boost_mode, tomb=tomb,
-            ),
-            schema=_KERNEL_OUT,
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.join(F.broadcast(queries.select("query_id", "k")), "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return gather(scatter(
+        spark, index_dir, per_term, prep.SIMPLE_FIELDS,
+        _function_score_kernel(
+            stats["avgdl"], stats["n_docs"], boost_mode,
+            tomb=tombstones.load_tombstones(spark, index_dir),
+        ),
+        _KERNEL_OUT, _DECODE_COLS, right=allowed, with_k=True,
+    ))
 
 
 def filtered_topk_multi(

@@ -13,7 +13,7 @@ pytest asserts exact equality, not tolerance).
 
 Scale shape: explain targets a handful of (query, doc) pairs — the
 top-k a user is debugging. The pairs are driver-known and tiny, so they
-ride into the shard kernel inside the broadcast query map, the block
+ride into the shard kernel inside the per-term query map, the block
 decode is pruned to blocks whose doc range contains a target
 (engine._pruned_runs), and the parquet scan keeps score_topk's term
 In-filter pushdown. Cost scales with the target set, not the corpus.
@@ -21,17 +21,14 @@ In-filter pushdown. Cost scales with the target set, not the corpus.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from data_prepper_spark.index import layout, tombstones
+from data_prepper_spark.index import tombstones
 from data_prepper_spark.query import engine, prep
 from data_prepper_spark.query.bm25_df import B, K1
-from data_prepper_spark.query.exchange import spread_by_shard
+from data_prepper_spark.query.exchange import scatter
 
 _OUT = (
     "query_id string, doc_id long, term string, tf int, dl int, df long, "
@@ -40,7 +37,7 @@ _OUT = (
 
 
 def _explain_kernel(avgdl: float, n_docs: int, tomb=None):
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         out = {c: [] for c in
                ("query_id", "doc_id", "term", "tf", "dl", "df",
                 "idf", "tf_norm", "boost", "term_score")}
@@ -104,33 +101,12 @@ def explain_hits(
         tgt = sorted(targets[q["query_id"]])
         for t, b in prep.boosted_terms(q["query_text"], mode).items():
             per_term.setdefault(t, []).append((q["query_id"], b, tgt))
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    if not terms or not targets or (
-        "://" not in index_dir and not os.path.exists(blocks_path)
-    ):
-        return spark.createDataFrame([], _OUT)
-    qmap = prep.qmap_df(
-        spark, per_term,
+    out = scatter(
+        spark, index_dir, per_term,
         "query_id:string,boost:double,targets:array<bigint>",
-    )
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    dict_slice = dictionary.filter(F.col("term").isin(terms))
-    blocks = spark.read.parquet(blocks_path)
-    if "seg" not in blocks.columns:
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    needed = (
-        blocks.select(
-            "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-            "gaps", "tfs", "dls",
-        )
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
-        .join(F.broadcast(dict_slice), "term")
-    )
-    tomb = tombstones.load_tombstones(spark, index_dir)
-    out = spread_by_shard(needed).groupBy("shard").applyInPandas(
-        _explain_kernel(stats["avgdl"], stats["n_docs"], tomb), schema=_OUT
+        _explain_kernel(stats["avgdl"], stats["n_docs"],
+                        tombstones.load_tombstones(spark, index_dir)),
+        _OUT, engine._DECODE_COLS,
     )
     return out.orderBy("query_id", "doc_id", "term")
 

@@ -24,17 +24,19 @@ join with zero corpus shuffle. The facet agg itself is two-phase
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_prepper_spark.index import layout, tombstones
+from data_prepper_spark.index import tombstones
 from data_prepper_spark.query import prep
-from data_prepper_spark.query.engine import _decode_term_runs, load_stats
-from data_prepper_spark.query.exchange import spread_by_shard
+from data_prepper_spark.query.engine import (
+    _DECODE_COLS,
+    _decode_term_runs,
+    load_stats,
+)
+from data_prepper_spark.query.exchange import read_dictionary, scatter
 
 _MATCH_OUT = "query_id string, doc_id long"
 
@@ -43,7 +45,7 @@ def _match_kernel(tomb=None):
     """Per-shard: (query_id, doc_id) for every doc containing ANY of the
     query's terms (OpenSearch `match` / bool-should msm=1 match set)."""
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         decoded: dict[str, np.ndarray] = {}
         queries: dict[str, list[str]] = {}
         for term, tg in pdf.groupby("term", sort=True):
@@ -74,26 +76,10 @@ def match_docs(
     per_term = prep.count_entries(
         prep.collect_rows(queries, "query_id", "query_text"), mode
     )
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
-    if not terms or local_missing:
-        return spark.createDataFrame([], _MATCH_OUT)
-    qmap = prep.qmap_df(spark, per_term, prep.COUNT_FIELDS)
-    blocks = spark.read.parquet(blocks_path)
-    if "seg" not in blocks.columns:
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    needed = (
-        blocks.select(
-            "shard", "seg", "term", "block_ord", "first_doc",
-            "gaps", "tfs", "dls",
-        )
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
-    )
-    tomb = tombstones.load_tombstones(spark, index_dir)
-    return spread_by_shard(needed).groupBy("shard").applyInPandas(
-        _match_kernel(tomb=tomb), schema=_MATCH_OUT
+    return scatter(
+        spark, index_dir, per_term, prep.COUNT_FIELDS,
+        _match_kernel(tomb=tombstones.load_tombstones(spark, index_dir)),
+        _MATCH_OUT, _DECODE_COLS, dictionary=False,
     )
 
 
@@ -526,8 +512,8 @@ def significant_text(
     fg_tot = m.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("fg_total")
     )
-    bg = spark.read.parquet(layout.resolve(index_dir, "dictionary")) \
-        .select("term", F.col("df").alias("bg_count"))
+    bg = read_dictionary(spark, index_dir).select(
+        "term", F.col("df").alias("bg_count"))
     scored = (
         fg.join(fg_tot, "query_id")
         .join(F.broadcast(bg), "term")

@@ -29,13 +29,18 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_prepper_spark.index import layout, tombstones
+from data_prepper_spark.index import tombstones
 from data_prepper_spark.query import prep
-from data_prepper_spark.query.engine import _KERNEL_OUT, _shard_kernel, load_stats
-from data_prepper_spark.query.exchange import spread_by_shard
+from data_prepper_spark.query.engine import (
+    _KERNEL_OUT,
+    _SCORE_COLS,
+    _shard_kernel,
+    load_stats,
+)
+from data_prepper_spark.query.exchange import gather, read_dictionary, scatter
 
 __all__ = ["multi_index_topk"]
 
@@ -71,21 +76,12 @@ def multi_index_topk(
         mode,
     )
     terms = sorted(per_term)
-    if not terms:
-        return spark.createDataFrame(
-            [], "query_id string, rank long, index int, doc_id long, score double"
-        )
-    qmap = prep.qmap_df(spark, per_term, prep.SCORE_FIELDS)
 
     # union df across member dictionaries (driver-known term set -> the
     # slices are tiny; re-aggregated df feeds the kernel's idf)
     dict_union = None
     for d in index_dirs:
-        sl = (
-            spark.read.parquet(layout.resolve(d, "dictionary"))
-            .filter(F.col("term").isin(terms))
-            .select("term", "df")
-        )
+        sl = read_dictionary(spark, d).filter(F.col("term").isin(terms))
         dict_union = sl if dict_union is None else dict_union.unionByName(sl)
     dict_union = dict_union.groupBy("term").agg(F.sum("df").alias("df"))
 
@@ -97,43 +93,20 @@ def multi_index_topk(
         for s in stats
     )
 
-    per_index = []
+    allres = None
     for i, d in enumerate(index_dirs):
-        blocks = spark.read.parquet(layout.resolve(d, "blocks"))
-        if "seg" not in blocks.columns:
-            blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
         tomb = tombstones.load_tombstones(spark, d)
-        needed = (
-            blocks.select(
-                "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-                "gaps", "tfs", "dls", "max_partial",
-            )
-            .filter(F.col("term").isin(terms))
-            .join(F.broadcast(qmap), "term")
-            .join(F.broadcast(dict_union), "term")
-        )
         # one kernel pass per member index: shard keys stay per-index
         # (same exchange class as score_topk), union stats injected
-        res = spread_by_shard(needed).groupBy("shard").applyInPandas(
+        res = scatter(
+            spark, d, per_term, prep.SCORE_FIELDS,
             _shard_kernel(
                 avgdl, n_docs, algo, ub_scale,
                 cache_ns=(os.path.abspath(d), "multi", n_docs,
                           round(avgdl, 9), tombstones.fingerprint(tomb)),
                 tomb=tomb,
             ),
-            schema=_KERNEL_OUT,
+            _KERNEL_OUT, _SCORE_COLS, dictionary=dict_union, with_k=True,
         ).withColumn("index", F.lit(i))
-        per_index.append(res)
-
-    allres = per_index[0]
-    for r in per_index[1:]:
-        allres = allres.unionByName(r)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id"), F.asc("index")
-    )
-    return (
-        allres.join(F.broadcast(queries.select("query_id", "k")), "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "index", "doc_id", "score")
-    )
+        allres = res if allres is None else allres.unionByName(res)
+    return gather(allres, "index")

@@ -39,14 +39,24 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_prepper_spark.index import layout, tombstones
 from data_prepper_spark.query import wand as wand_mod
 from data_prepper_spark.query import prep
-from data_prepper_spark.query.engine import _KERNEL_OUT, _NsCache, load_stats
-from data_prepper_spark.query.exchange import spread_by_shard
+from data_prepper_spark.query.engine import (
+    _KERNEL_OUT,
+    _SCORE_COLS,
+    _NsCache,
+    load_stats,
+)
+from data_prepper_spark.query.exchange import (
+    gather,
+    read_blocks,
+    read_dictionary,
+    scatter,
+)
 
 __all__ = ["build_fields_index", "multi_match_topk", "parse_field_specs"]
 
@@ -124,11 +134,14 @@ def _mm_kernel(field_conf: dict, mm_type: str, tie_breaker: float,
     field), field-boost scale, dis_max/sum combine, boundary-exact
     top-k. field_conf: field -> dict(n_docs, avgdl, boost, tomb, ns)."""
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(key[0])
         xf = mm_type == "cross_fields"
+        # cached partials are idf-scaled, and a cross_fields idf blends
+        # the statistics of EVERY queried field: pin them all
+        xf_ns = ("xf", tuple(sorted((f, c["ns"]) for f, c in field_conf.items())))
         caches = {
-            f: _NsCache(((c["ns"], "xf") if xf else c["ns"], shard))
+            f: _NsCache(((c["ns"], xf_ns) if xf else c["ns"], shard))
             for f, c in field_conf.items()
         }
         # pass 1: collect per-(field, term) block groups + per-field df
@@ -300,15 +313,10 @@ def multi_match_topk(
     queries = queries.select("query_id", "query_text", "k")
     per_term = prep.simple_entries(prep.collect_rows(queries), mode)
     terms = sorted(per_term)
-    if not terms:
-        return spark.createDataFrame(
-            [], "query_id string, rank long, doc_id long, score double"
-        )
-    qmap = prep.qmap_df(spark, per_term, prep.SIMPLE_FIELDS)
 
     field_conf: dict[str, dict] = {}
     blend: dict[str, tuple] = {}
-    needed = None
+    blocks = None
     for field, boost in specs:
         d = os.path.join(index_dir, "fields", field)
         stats = load_stats(d)
@@ -321,11 +329,7 @@ def multi_match_topk(
             "ns": (os.path.abspath(d), stats["n_docs"],
                    round(stats["avgdl"], 9), tombstones.fingerprint(tomb)),
         }
-        dict_slice = (
-            spark.read.parquet(layout.resolve(d, "dictionary"))
-            .filter(F.col("term").isin(terms))
-            .select("term", "df")
-        )
+        dict_slice = read_dictionary(spark, d).filter(F.col("term").isin(terms))
         if mm_type == "cross_fields":
             for r in dict_slice.groupBy("term").agg(
                 F.sum("df").alias("df")
@@ -335,29 +339,17 @@ def multi_match_topk(
                     max(cur[0], int(r["df"])),
                     max(cur[1], int(stats["n_docs"])),
                 )
-        blocks = spark.read.parquet(layout.resolve(d, "blocks"))
-        if "seg" not in blocks.columns:
-            blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-        nf = (
-            blocks.select(
-                "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-                "gaps", "tfs", "dls", "max_partial",
-            )
-            .filter(F.col("term").isin(terms))
-            .join(F.broadcast(qmap), "term")
+        # each field's blocks carry that field's own df
+        fb = (
+            read_blocks(spark, d).filter(F.col("term").isin(terms))
             .join(F.broadcast(dict_slice), "term")
             .withColumn("field", F.lit(field))
         )
-        needed = nf if needed is None else needed.unionByName(nf)
+        blocks = fb if blocks is None else blocks.unionByName(fb)
 
-    per_shard = spread_by_shard(needed).groupBy("shard").applyInPandas(
+    return gather(scatter(
+        spark, blocks, per_term, prep.SIMPLE_FIELDS,
         _mm_kernel(field_conf, mm_type, float(tie_breaker), blend=blend),
-        schema=_KERNEL_OUT,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.join(F.broadcast(queries.select("query_id", "k")), "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+        _KERNEL_OUT, _SCORE_COLS + ("df", "field"),
+        dictionary=False, with_k=True,
+    ))

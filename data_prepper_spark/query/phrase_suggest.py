@@ -40,14 +40,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_prepper_spark.index import layout, tombstones
+from data_prepper_spark.index import tombstones
 from data_prepper_spark.index.tokenizer import tokenize
 from data_prepper_spark.query import prep
 from data_prepper_spark.query.engine import (
+    _POSITION_COLS,
     _phrase_kernel,
     load_stats,
-    spread_by_shard,
 )
+from data_prepper_spark.query.exchange import read_dictionary, scatter
 from data_prepper_spark.query.suggest import suggest_terms
 
 _DF_FLOOR = 1e-12  # log() floor for out-of-vocabulary terms
@@ -66,8 +67,6 @@ def count_phrase_matches(
     (k = n_docs) and the kernel output collapsed to per-shard counts
     INSIDE the kernel task — the exchange carries one (query_id, n)
     row per (shard, query), never the match list."""
-    import os
-
     stats = load_stats(index_dir)
     if not stats.get("positions", False):
         raise ValueError(
@@ -81,30 +80,12 @@ def count_phrase_matches(
         for r in queries.select("query_id", "query_text").collect()
     ]
     per_term = prep.phrase_entries(rows, mode)
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
-    if not terms or local_missing:
-        return spark.createDataFrame([], "query_id string, n long")
-    qmap = prep.qmap_df(spark, per_term, prep.PHRASE_FIELDS)
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    dict_slice = dictionary.filter(F.col("term").isin(terms))
-    blocks = spark.read.parquet(blocks_path)
-    needed = (
-        blocks.select(
-            "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-            "gaps", "tfs", "dls", "poss",
-        )
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
-        .join(F.broadcast(dict_slice), "term")
-    )
     inner = _phrase_kernel(
         stats["avgdl"], stats["n_docs"],
         tomb=tombstones.load_tombstones(spark, index_dir),
     )
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         hits = inner(key, pdf)
         if len(hits) == 0:
             return pd.DataFrame({"query_id": pd.Series([], dtype=object),
@@ -112,8 +93,9 @@ def count_phrase_matches(
         g = hits.groupby("query_id", as_index=False).size()
         return g.rename(columns={"size": "n"})
 
-    per_shard = spread_by_shard(needed).groupBy("shard").applyInPandas(
-        run, schema="query_id string, n long"
+    per_shard = scatter(
+        spark, index_dir, per_term, prep.PHRASE_FIELDS, run,
+        "query_id string, n long", _POSITION_COLS,
     )
     return per_shard.groupBy("query_id").agg(F.sum("n").alias("n"))
 
@@ -167,7 +149,7 @@ def suggest_phrases(
         df_term[r["suggestion"]] = float(r["df"])
     # unigram df for the input's own tokens (suggest_terms excludes
     # the identity match): one In-probe of the term-sorted dictionary
-    d = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
+    d = read_dictionary(spark, index_dir)
     for r in d.filter(F.col("term").isin(list(set(tokens)))) \
             .select("term", "df").collect():
         df_term[r["term"]] = float(r["df"])

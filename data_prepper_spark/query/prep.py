@@ -1,4 +1,4 @@
-"""Driver-side query preparation: LocalRelation qmaps.
+"""Driver-side query preparation: per-term query maps.
 
 Every query path's input is driver-literal — a handful to a few hundred
 query rows the caller just built (the reference serves search requests
@@ -14,10 +14,10 @@ at every scale, and it dominates interactive-latency queries.
 
 This module does the same prep in pure Python with the SAME analyzer
 (index/tokenizer.py `tokenize` — the Python/Spark-SQL/DuckDB-pinned
-chain, including '+stop'/'+stem' filters), then ships the per-term
-query map as ONE LocalRelation (`spark.createDataFrame`) the engine
-broadcasts into the block scan. Spark's first job on any query path is
-now the kernel scatter itself.
+chain, including '+stop'/'+stem' filters). Each builder returns the
+per-term query map {term: [entry tuple]}; query/exchange.py `scatter`
+ships it inside the kernel closure, so no Spark job ever runs for it:
+a query path's first job is the scan feeding the kernel scatter.
 
 Semantics are pinned to the retired SQL prep expression-for-expression
 (boost suffix extract vs strip regexes, array_distinct max-boost dedup,
@@ -29,7 +29,7 @@ reimplementation of the old SQL prep on randomized queries.
 from __future__ import annotations
 
 import re
-from typing import Any, Iterable
+from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,18 +55,6 @@ def collect_rows(queries: DataFrame, *cols: str) -> list[dict]:
     if cols:
         queries = queries.select(*cols)
     return [r.asDict() for r in queries.collect()]
-
-
-def qmap_df(
-    spark: SparkSession,
-    per_term: dict[str, list[tuple]],
-    struct_fields: str,
-) -> DataFrame:
-    """per_term -> LocalRelation (term string, queries array<struct>).
-    Term order is sorted for plan stability."""
-    schema = f"term string, queries array<struct<{struct_fields}>>"
-    data = [(t, per_term[t]) for t in sorted(per_term)]
-    return spark.createDataFrame(data, schema)
 
 
 def units_with_boost(text: str | None) -> list[tuple[str, float]]:

@@ -33,22 +33,21 @@ to decode.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from data_prepper_spark.index import layout, tombstones
+from data_prepper_spark.index import tombstones
 from data_prepper_spark.index.tokenizer import tokenize
 from data_prepper_spark.query import prep
 from data_prepper_spark.query.engine import (
     _KERNEL_OUT,
+    _POSITION_COLS,
     _decode_term_runs,
     _pruned_runs,
     load_stats,
 )
+from data_prepper_spark.query.exchange import gather, scatter
 
 __all__ = ["span_near_topk"]
 
@@ -125,7 +124,7 @@ def _min_window_ordered(seqs: list[np.ndarray]) -> int:
 def _span_kernel(avgdl: float, n_docs: int, tomb=None):
     from data_prepper_spark.index import codec
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         groups: dict[str, pd.DataFrame] = {}
         dfs: dict[str, int] = {}
         idfs: dict[str, float] = {}
@@ -217,8 +216,6 @@ def span_near_topk(
 ) -> DataFrame:
     """queries(query_id, query_text, slop, in_order, k) ->
     (query_id, rank, doc_id, score). See module docstring."""
-    from data_prepper_spark.query.exchange import spread_by_shard
-
     stats = load_stats(index_dir)
     if not stats.get("positions", False):
         raise ValueError(
@@ -227,40 +224,9 @@ def span_near_topk(
         )
     mode = stats.get("tokenizer", "ascii")
     per_term = _span_entries(prep.collect_rows(queries), mode)
-    terms = sorted(per_term)
-    blocks_path = layout.resolve(index_dir, "blocks")
-    local_missing = "://" not in index_dir and not os.path.exists(blocks_path)
-    if not terms or local_missing:
-        return spark.createDataFrame(
-            [], "query_id string, rank long, doc_id long, score double")
-    qmap = prep.qmap_df(spark, per_term, SPAN_FIELDS)
-    dictionary = spark.read.parquet(layout.resolve(index_dir, "dictionary"))
-    dict_slice = dictionary.filter(F.col("term").isin(terms))
-    blocks = spark.read.parquet(blocks_path)
-    if "seg" not in blocks.columns:
-        blocks = blocks.withColumn("seg", F.lit(0).cast("long"))
-    needed = (
-        blocks.select(
-            "shard", "seg", "term", "block_ord", "first_doc", "last_doc",
-            "gaps", "tfs", "dls", "poss",
-        )
-        .filter(F.col("term").isin(terms))
-        .join(F.broadcast(qmap), "term")
-        .join(F.broadcast(dict_slice), "term")
-    )
-    per_shard = spread_by_shard(needed).groupBy("shard").applyInPandas(
-        _span_kernel(
-            stats["avgdl"], stats["n_docs"],
-            tomb=tombstones.load_tombstones(spark, index_dir),
-        ),
-        schema=_KERNEL_OUT,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.join(
-            F.broadcast(queries.select("query_id", "k")), "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return gather(scatter(
+        spark, index_dir, per_term, SPAN_FIELDS,
+        _span_kernel(stats["avgdl"], stats["n_docs"],
+                     tomb=tombstones.load_tombstones(spark, index_dir)),
+        _KERNEL_OUT, _POSITION_COLS, with_k=True,
+    ))

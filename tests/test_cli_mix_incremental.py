@@ -107,3 +107,18 @@ def test_semdedup_and_pq_cli(spark, tmp_path, capsys):
     assert rc == 0
     lines = capsys.readouterr().out.strip().splitlines()
     assert len([l for l in lines if l.startswith("{")]) == 3
+
+
+@pytest.mark.parametrize("argv", [
+    [],
+    ["--queries", "q.parquet", "--vector", "1.0,0.0"],
+])
+def test_pq_query_needs_exactly_one_query_source(argv, capsys):
+    """pq-query with neither (or both) --queries and --vector is a
+    usage error before any Spark work, not a traceback."""
+    from data_prepper_spark import cli
+
+    with pytest.raises(SystemExit) as exc:
+        cli.main(["pq-query", "--index", "unused", *argv])
+    assert exc.value.code == 2
+    assert "--queries" in capsys.readouterr().err

@@ -228,3 +228,57 @@ def test_filtered_topk_multi(spark, corpus_and_index):
     want = engine.score_topk(spark, d, one).toPandas()
     sub = got[got.query_id == "m4"].reset_index(drop=True)
     assert list(sub.doc_id) == list(want.doc_id)
+
+
+def _oracle_filtered(pdf, query_text, allow_mask, k):
+    """oracle/bm25.py over the whole corpus (filter context keeps full
+    corpus stats), restricted to allowed docs, first k."""
+    from data_prepper_spark.oracle import bm25 as oracle
+
+    idx = oracle.build_index(list(zip(pdf.doc_id.astype(int), pdf.text)))
+    allowed = set(pdf.doc_id[allow_mask].astype(int))
+    ranked = oracle.score_query(idx, query_text, k=len(pdf))
+    return [(d, s) for d, s in ranked if d in allowed][:k]
+
+
+@pytest.mark.parametrize("ids,pad", [
+    ("padded", 8), ("canonical", 0), ("mixed", None),
+])
+def test_filtered_arith_ids_route_like_the_build(spark, tmp_path, ids, pad):
+    """Engine-assigned arithmetic ids: filter-context docs must hash the
+    conv_id string the build hashed. FIXTURES ids are zero-padded
+    ('conv-00000123'), so a bare 'conv-' || serial re-derivation routes
+    ~7/8 of docs to the wrong shard; the build records the pad width in
+    stats.json and routing re-derives with it. Ids no single width
+    reproduces record none: docs must carry conv_id, else the call
+    raises. Every route ranks like the oracle."""
+    pdf = generate_pandas(0, 160)
+    serial = pdf.conv_id.str.slice(5).astype(int)
+    if ids == "canonical":
+        pdf["conv_id"] = "conv-" + serial.astype(str)
+    elif ids == "mixed":
+        pdf["conv_id"] = pdf.conv_id.where(
+            serial % 2 == 0, "conv-" + serial.astype(str))
+    d = str(tmp_path / "arith_idx")
+    ib.build_index(spark, spark.createDataFrame(pdf), d, n_shards=8,
+                   block_size=32)
+    stats = engine.load_stats(d)
+    assert stats["id_scheme"] == "arith"
+    assert stats["conv_id_pad"] == pad
+    pdf["doc_id"] = serial * DOC_ID_STRIDE + pdf.turn_idx
+    want = _oracle_filtered(pdf, "error timeout", pdf.role == "user", 10)
+    assert len(want) == 10
+    qdf = spark.createDataFrame(
+        [("q", "error timeout", 10)],
+        "query_id string, query_text string, k int",
+    )
+    with_conv = spark.createDataFrame(pdf[["doc_id", "conv_id", "role"]])
+    no_conv = spark.createDataFrame(pdf[["doc_id", "role"]])
+    if pad is None:
+        with pytest.raises(ValueError, match="conv_id"):
+            engine.filtered_topk(spark, d, qdf, no_conv, "role = 'user'")
+    for docs in [with_conv] + ([no_conv] if pad is not None else []):
+        got = engine.filtered_topk(spark, d, qdf, docs,
+                                   "role = 'user'").toPandas()
+        assert [int(x) for x in got.doc_id] == [w[0] for w in want]
+        assert np.allclose(got.score, [w[1] for w in want], atol=1e-9)

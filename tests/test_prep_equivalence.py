@@ -236,21 +236,12 @@ def test_count_and_simple_entries():
 # ------------------------------------------- distributed prep (r5)
 
 
-def _qmap_python(spark, builder, rows, fields, mode):
-    per_term = builder(rows, mode)
-    return prep.qmap_df(spark, per_term, fields)
-
-
 def _norm_qmap(df):
     """-> {term: sorted list of entry tuples} (order-insensitive: the
     distributed merge is partition-order-independent by sort_array;
     the Python path keeps row order — content must be identical)."""
-    out = {}
-    for r in df.collect():
-        out[r["term"]] = sorted(
-            tuple(e) for e in [tuple(x) for x in r["queries"]]
-        )
-    return out
+    return {r["term"]: sorted(tuple(x) for x in r["queries"])
+            for r in df.collect()}
 
 
 @pytest.mark.parametrize("kind,fields,extra", [
@@ -295,7 +286,7 @@ def test_distributed_prep_matches_python(spark, kind, fields, extra):
     builder = getattr(prep, f"{kind}_entries")
     # normalize rows the way collect_rows would deliver them
     py_rows = [{c: r.get(c) for c in cols} for r in rows]
-    want = _norm_qmap(_qmap_python(spark, builder, py_rows, fields, "ascii"))
+    want = {t: sorted(es) for t, es in builder(py_rows, "ascii").items()}
     got = _norm_qmap(prep.qmap_df_dist(spark, qdf, kind, "ascii"))
     assert want.keys() == got.keys()
     for t in want:
